@@ -54,6 +54,18 @@ object Analytics {
   private def withWidth[T](spark: SparkSession, w: Int)(body: => T): T =
     StatefulQueries.withShuffleWidth(spark, w)(body)
 
+  /** Failure-path join of a sibling driver-thread core: before the caller
+    * rethrows its own error (and its finally releases the shared cache),
+    * wait for `f` — but at most a few minutes, so a sibling wedged by the
+    * same fault cannot turn the surfaced error into a hang. A timeout or
+    * the sibling's own failure is dropped: the caller's error is the one
+    * that surfaces. */
+  private def settleBeforeRethrow(f: scala.concurrent.Future[_]): Unit = {
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    try Await.ready(f, 3.minutes) catch { case _: Throwable => () }
+  }
+
   /** Fixed hour-index base (epoch hours) shared with the oracle SQL: the
     * regressor is HOURS SINCE this base, not raw epoch hours, keeping every
     * moment's magnitude far inside the range where the decimal → double
@@ -1719,8 +1731,8 @@ object Analytics {
         .select(col("user_id").as("node")).distinct()
       // LPA on a second driver thread, CC on this one; await INSIDE the
       // withWidth scope so the narrow width outlives both cores. The
-      // future is ALSO awaited on the failure path (Await.ready in the
-      // catch): if lshComponentsOf throws first, the outer finally would
+      // future is ALSO awaited on the failure path (settleBeforeRethrow,
+      // bounded): if lshComponentsOf throws first, the outer finally would
       // otherwise unpersist the shared edge cache under a still-running
       // LPA (recompute-from-lineage churn) and drop LPA's own failure
       // silently (r19 advice #2)
@@ -1734,7 +1746,7 @@ object Analytics {
       val comp = try Dedup.lshComponentsOf(
         e.select(col("u").as("doc_a"), col("v").as("doc_b")))
       catch { case t: Throwable =>
-        try Await.ready(lpaF, Duration.Inf) catch { case _: Throwable => () }
+        settleBeforeRethrow(lpaF)
         throw t
       }
       val lpa = Await.result(lpaF, Duration.Inf)
@@ -2287,7 +2299,7 @@ object Analytics {
       // the shared cache while the wedge job still runs
       val tri = try triangleCountOf(spark, ce)
       catch { case t: Throwable =>
-        try Await.ready(wedgesF, Duration.Inf) catch { case _: Throwable => () }
+        settleBeforeRethrow(wedgesF)
         throw t
       }
       (tri, Await.result(wedgesF, Duration.Inf))

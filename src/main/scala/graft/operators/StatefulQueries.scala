@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{LocalCheckpointFileManager, Tables}
 import graft.streaming.StatefulOps
 import graft.streaming.StatefulOps.{KSV, KV}
 
@@ -85,51 +85,68 @@ object StatefulQueries {
       } finally {
         if (spark.catalog.tableExists(qn)) spark.catalog.dropTempView(qn)
       }
-    withDrainStateStore(spark) {
-      stateWidth match {
-        case Some(w) => withShuffleWidth(spark, w)(run())
-        case None    => run()
-      }
-    }
+    withDrainStateStore(spark)(withStreamConf(spark, stateWidth)(run()))
   }
 
   private val ProviderClassKey = "spark.sql.streaming.stateStore.providerClass"
-  private val EngineDefaultProvider =
-    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+  private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
   private val MemoryDrainProvider =
     "org.apache.spark.sql.execution.streaming.state.GraftMemoryStateStoreProvider"
+
+  /** The ONE save/restore scope for session settings: run `body` with the
+    * `set` entries applied and, for each `setIfUnset` entry, applied only
+    * when the caller has not set that key explicitly (to any value, the
+    * engine default included: such a caller PINNED it). Afterwards every
+    * applied key goes back to what it was — its previous value, or unset
+    * — on every path. "Explicitly set" is read from `conf.getAll`, not
+    * `getOption`, which also reports a registered key's default. */
+  private[graft] def withConf[T](spark: SparkSession, set: Seq[(String, String)],
+                                 setIfUnset: Seq[(String, String)] = Nil)(body: => T): T = {
+    val explicit = spark.conf.getAll
+    val applied = set ++ setIfUnset.filterNot { case (k, _) => explicit.contains(k) }
+    try {
+      applied.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally applied.foreach { case (k, _) =>
+      explicit.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None    => spark.conf.unset(k)
+      }
+    }
+  }
 
   /** Run a memory-sink drain on the heap-only state store provider
     * ([[org.apache.spark.sql.execution.streaming.state.GraftMemoryStateStoreProvider]]),
     * restoring the session provider on every path. The drains are bounded
     * single-JVM replays over ephemeral checkpoints, so the engine default's
-    * per-batch delta-file writes buy no recovery anyone can use — measured
-    * 50–90 ms of summed commitTimeMs per store instance per batch on
-    * kilobyte state (ProbeDrainBreakdown, r20). Two guards keep the swap
-    * honest:
-    *  - a caller that PINNED a provider (withRocksDbStateStore, the TWS
-    *    family) wins — if the session value is anything but the engine
-    *    default, this is a no-op, so the `*_rocksdb`/TWS twins keep
+    * per-batch delta files buy no recovery anyone can use. Their cost —
+    * measured 50–90 ms of summed commitTimeMs per store instance per batch
+    * on kilobyte state (ProbeDrainBreakdown, r20) — was Hadoop forking
+    * `chmod` and `stat` for every checkpoint file on a local file system
+    * without native Hadoop, not durability; [[withStreamConf]]'s
+    * fork-free checkpoint manager now removes most of it on every
+    * provider. Two guards keep the swap honest:
+    *  - a caller that set the provider explicitly — to any class, the
+    *    engine default included (withRocksDbStateStore, the TWS family) —
+    *    wins: the swap is then a no-op, so the `*_rocksdb`/TWS twins keep
     *    measuring the production provider;
     *  - `spark.graft.drain.stateStoreProvider=engine` turns the swap off
     *    globally (production guidance: multi-node or fault-tolerant jobs,
     *    or state larger than heap, keep the engine/RocksDB providers —
     *    the memory provider cannot reload state after executor loss). */
-  private[operators] def withDrainStateStore[T](spark: SparkSession)(body: => T): T = {
-    val mode = spark.conf.getOption("spark.graft.drain.stateStoreProvider")
-      .getOrElse("memory")
-    val current = spark.conf.get(ProviderClassKey, EngineDefaultProvider)
-    if (mode != "memory" || current != EngineDefaultProvider) body
-    else {
-      val prev = spark.conf.getOption(ProviderClassKey)
-      spark.conf.set(ProviderClassKey, MemoryDrainProvider)
-      try body
-      finally prev match {
-        case Some(v) => spark.conf.set(ProviderClassKey, v)
-        case None    => spark.conf.unset(ProviderClassKey)
-      }
-    }
-  }
+  private[operators] def withDrainStateStore[T](spark: SparkSession)(body: => T): T =
+    if (spark.conf.getOption("spark.graft.drain.stateStoreProvider").exists(_ != "memory")) body
+    else withConf(spark, Nil, setIfUnset = Seq(ProviderClassKey -> MemoryDrainProvider))(body)
+
+  /** The settings every streaming query the library starts itself runs
+    * under, restored on every path: the fork-free
+    * [[graft.io.LocalCheckpointFileManager]] unless the caller chose a
+    * checkpoint manager, and, for stateful queries, the shuffle width
+    * (= state store instance count) `width`. */
+  private[graft] def withStreamConf[T](spark: SparkSession, width: Option[Int])(body: => T): T =
+    withConf(spark, width.map(w => ShufflePartitionsKey -> w.toString).toSeq,
+      setIfUnset = Seq(LocalCheckpointFileManager.ConfKey ->
+        classOf[LocalCheckpointFileManager].getName))(body)
 
   /** Run `body` with NO-DATA micro-batches disabled, restoring the session
     * value afterwards. `TimeMode.ProcessingTime` operators report
@@ -139,22 +156,13 @@ object StatefulQueries {
     * (and `processAllAvailable` never sees `noNewData`). A drain whose
     * operator needs no end-of-stream flush — the native-TTL dedup's
     * emission is cumulative — disables them for the run instead. */
-  private[operators] def withNoDataBatchesDisabled[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try body
-    finally spark.conf.set(key, prev)
-  }
+  private[operators] def withNoDataBatchesDisabled[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))(body)
 
   /** Run `body` with the stateful-shuffle width (= state store instance
     * count) narrowed to `w`, restoring the session value afterwards. */
-  private[operators] def withShuffleWidth[T](spark: SparkSession, w: Int)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", w.toString)
-    try body
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private[operators] def withShuffleWidth[T](spark: SparkSession, w: Int)(body: => T): T =
+    withConf(spark, Seq(ShufflePartitionsKey -> w.toString))(body)
 
   private def drainStateful(spark: SparkSession, sfDir: String)
                            (op: DataFrame => DataFrame): DataFrame = {
@@ -170,16 +178,8 @@ object StatefulQueries {
     * the previous value on every path — the flag changes how ANY
     * int64-nanos parquet column is read, so it must not outlive the scope
     * that needed it. */
-  private[operators] def withNanosAsLong[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  private[operators] def withNanosAsLong[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true"))(body)
 
   /** Drain scaffold over the `documents` parquet (layout-adaptive via
     * [[Tables.streamTable]]), shared by the
@@ -230,17 +230,9 @@ object StatefulQueries {
     * (q1rdb, the TTL-dedup RocksDB twin) and by transformWithState, which
     * REQUIRES it (each TWS state variable is a column family; the
     * HDFS-backed provider supports only one). */
-  private[operators] def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  private[operators] def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, Seq(ProviderClassKey ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))(body)
 
   /** Drive a streaming op over Spark's SOCKET source: serve `chunks` of
     * text lines from an in-process loopback server ([[graft.io.SocketText]]),
@@ -257,7 +249,7 @@ object StatefulQueries {
       spark: SparkSession, chunks: Seq[Seq[String]], expected: Seq[Long])(
       op: DataFrame => DataFrame)(
       check: org.apache.spark.sql.streaming.StreamingQuery => Unit = _ => ()): DataFrame =
-    withDrainStateStore(spark) { withShuffleWidth(spark, 8) {
+    withDrainStateStore(spark) { withStreamConf(spark, Some(8)) {
       require(chunks.length == expected.length && expected == expected.sorted,
         "expected must give a cumulative sink row count per chunk")
       val srv = new graft.io.SocketText()
@@ -368,7 +360,7 @@ object StatefulQueries {
     val ckpt = work.resolve("ckpt").toString
     val outDir = work.resolve("out").toString
     val schema = spark.read.parquet(copyDir).schema
-    def runOnce(): Unit = withShuffleWidth(spark, 8) {
+    def runOnce(): Unit = withStreamConf(spark, Some(8)) {
       val stream = spark.readStream.schema(schema).parquet(srcDir.toString)
       val out = StatefulOps.blockAverage(stream
         .select(col("event_type").as("key"), col("event_id").as("ord"), col("value"))
@@ -462,7 +454,7 @@ object StatefulQueries {
     val dir = timeOrderedFilesCopy(spark, copyTag, names)(frames)
     val stream = spark.readStream.schema(spark.read.parquet(dir).schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    withShuffleWidth(spark, 8) {
+    withStreamConf(spark, Some(8)) {
       val q = stream.writeStream.outputMode("append")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: DataFrame, id: Long) => perBatch(b, id) }
@@ -1792,7 +1784,7 @@ object StatefulQueries {
       val stream = spark.readStream
         .schema(spark.read.parquet(copyDir).schema)
         .option("maxFilesPerTrigger", "1").parquet(copyDir)
-      withShuffleWidth(spark, 8) {
+      withStreamConf(spark, Some(8)) {
         val q = stream.writeStream.outputMode("append")
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (b: DataFrame, id: Long) =>
@@ -2056,7 +2048,7 @@ object StatefulQueries {
       val stream = spark.readStream
         .schema(spark.read.parquet(copyDir).schema)
         .option("maxFilesPerTrigger", "1").parquet(copyDir)
-      withShuffleWidth(spark, 8) {
+      withStreamConf(spark, Some(8)) {
         val q = stream.writeStream.outputMode("append")
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (b: DataFrame, id: Long) =>
@@ -2170,7 +2162,7 @@ object StatefulQueries {
       s"(got $nFiles replay file(s)) — the bitemporal oracle is stated on that split")
     val stream = spark.readStream.schema(spark.read.parquet(dir).schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    withShuffleWidth(spark, 8) {
+    withStreamConf(spark, Some(8)) {
       val q = stream.writeStream.outputMode("append")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: DataFrame, id: Long) =>

@@ -17,13 +17,19 @@ import org.apache.spark.sql.types.StructType
   * instance for durability the drain never uses — every `put` is also
   * serialized into an LZ4 delta stream, and `commit` finalizes that file
   * through the rename-based checkpoint file manager (measured 50–90 ms of
-  * summed commitTimeMs per store per batch on 1 KB of state). A drain whose
-  * checkpoint directory is deleted the moment the query finishes buys
-  * nothing with those writes. This provider is the same versioned-hash-map
-  * semantics with the durability layer removed: `getStore(v)` clones the
-  * committed map of version v (exactly the HDFS provider's load-and-copy),
-  * `commit` publishes version v+1 in memory, task retries re-read any
-  * retained version.
+  * summed commitTimeMs per store per batch on 1 KB of state). Most of those
+  * milliseconds were not the write itself: on a local file system without
+  * the native Hadoop library, Hadoop forks `chmod` for every file it
+  * creates and the default `FileContext` manager forks `stat` on every
+  * rename. The drains now also run on the fork-free
+  * [[graft.io.LocalCheckpointFileManager]], which removes that part for
+  * every provider; what is left here is the delta encoding and the file
+  * writes themselves. A drain whose checkpoint directory is deleted the
+  * moment the query finishes buys nothing with those writes. This provider
+  * is the same versioned-hash-map semantics with the durability layer
+  * removed: `getStore(v)` clones the committed map of version v (exactly
+  * the HDFS provider's load-and-copy), `commit` publishes version v+1 in
+  * memory, task retries re-read any retained version.
   *
   * What it deliberately does NOT support — every rejection is a path the
   * drains route to RocksDB instead (the production provider, kept as the
@@ -37,7 +43,7 @@ import org.apache.spark.sql.types.StructType
   * executor JVM. A multi-node or fault-tolerant job (lost executor ⇒ lost
   * version history ⇒ query fails instead of recovering) or state larger
   * than heap belongs on the RocksDB provider. The drain scaffold selects
-  * this class only when the session is running the engine default — see
+  * this class only when the caller has set no provider — see
   * `StatefulQueries.withDrainStateStore` — and
   * `spark.graft.drain.stateStoreProvider=engine` restores the engine
   * default for every drain without touching query code. */
@@ -198,8 +204,9 @@ class GraftMemoryStateStoreProvider extends StateStoreProvider {
   private class StateMap {
     private val outer =
       new ConcurrentHashMap[UnsafeRow, ConcurrentHashMap[UnsafeRow, UnsafeRow]]()
-    private var keys = 0L
-    private var bytes = 0L
+    // written by the task thread, read by progress reporting on others
+    @volatile private var keys = 0L
+    @volatile private var bytes = 0L
 
     // prefix projection over the leading key columns; built lazily per map
     // (UnsafeProjection is not thread-safe, and each store's tasks are
